@@ -16,6 +16,15 @@ partition overwrite — the scalable equivalent of the reference's
 Bronze business columns are all strings (schema-on-read, matching
 reset_schemas.sql:65-161 where even AMOUNT is VARCHAR); four lineage
 columns are appended at load time (reset_schemas.sql:68-71).
+
+The ADMIN tables are small and append-only, so the pipeline reads and
+appends them on the driver (``ledger`` module, pyarrow) rather than
+through ``Warehouse.read``/``append``; the files stay plain parquet in
+the same directories, and ``Warehouse.read`` still serves them to Spark
+consumers. A driver append commits by renaming a dot-prefixed temp file
+(invisible to Spark, Arrow and ``exists``), and it does not refresh
+Spark's cached relations: never ``cache()``/``persist()`` an ADMIN
+DataFrame.
 """
 
 from __future__ import annotations

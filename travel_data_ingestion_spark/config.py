@@ -3,16 +3,20 @@
 The reference drives its whole ingestion layer from a config table keyed
 by lower-cased target table (reference ingestion_logic.py:5-25
 load_config; sql/admin_file_details.sql:1-9). Same model here: config
-rows live in ``admin.file_details`` and are loaded into a dict.
+rows live in ``admin.file_details`` and are loaded into a dict. The
+table is read on the driver (``ledger`` module) and rewritten by Spark
+only when the config actually changes.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from collections import Counter
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import SparkSession
 
-from travel_data_ingestion_spark.catalog import Warehouse
+from travel_data_ingestion_spark import ledger
+from travel_data_ingestion_spark.catalog import ADMIN_SCHEMAS, Warehouse
 
 
 @dataclass(frozen=True)
@@ -53,39 +57,25 @@ def default_config(landing_dir: str) -> dict[str, FileDetail]:
     }
 
 
-def save_config(spark: SparkSession, wh: Warehouse, config: dict[str, FileDetail]) -> None:
-    rows = [
-        (
-            d.file_id,
-            d.container,
-            d.stage_name,
-            d.source_path,
-            d.file_pattern,
-            d.target_schema,
-            d.target_table,
-            d.file_format,
-        )
-        for d in config.values()
-    ]
-    from travel_data_ingestion_spark.catalog import ADMIN_SCHEMAS
+def _multiset(rows: list[dict]) -> Counter:
+    return Counter(tuple(sorted(r.items())) for r in rows)
 
-    df = spark.createDataFrame(rows, ADMIN_SCHEMAS["file_details"])
+
+def save_config(spark: SparkSession, wh: Warehouse, config: dict[str, FileDetail]) -> None:
+    """Replace ``admin.file_details`` with ``config`` — skipped when the
+    stored rows already equal it, so a steady-state tick writes nothing.
+    FileDetail's fields are the table's columns."""
+    rows = [asdict(d) for d in config.values()]
+    if _multiset(ledger.rows(wh, "file_details")) == _multiset(rows):
+        return
+    schema = ADMIN_SCHEMAS["file_details"]
+    df = spark.createDataFrame([tuple(r[f.name] for f in schema.fields) for r in rows], schema)
     wh.overwrite(spark, df, "admin", "file_details")
 
 
 def load_config(spark: SparkSession, wh: Warehouse) -> dict[str, FileDetail]:
-    """Config-table scan -> dict (reference ingestion_logic.py:5-25)."""
-    rows = wh.read(spark, "admin", "file_details").collect()
+    """Config-table scan -> dict (reference ingestion_logic.py:5-25), read
+    on the driver; ``spark`` is kept for the stable signature."""
     return {
-        r.target_table.lower(): FileDetail(
-            r.file_id,
-            r.source_path,
-            r.file_pattern,
-            r.target_schema,
-            r.target_table,
-            r.file_format,
-            r.container,
-            r.stage_name,
-        )
-        for r in rows
+        r["target_table"].lower(): FileDetail(**r) for r in ledger.rows(wh, "file_details")
     }

@@ -15,6 +15,13 @@ analog of the reference's in-place UPDATE. load_id = MAX(load_id)+1,
 matching the reference's own MAX-based id retrieval
 (ingestion_logic.py:149); single-driver sequencing is documented in
 SURVEY §7.4-4.
+
+Ledger I/O is driver-side (``ledger`` module, pyarrow): the exactly-once
+check, the id allocation and the RUNNING/SUCCESS/FAILURE rows run no
+Spark job, so a file costs only its own parse + bronze append. Order is
+write-ahead: RUNNING is committed (temp file + atomic rename) before
+the file is read, SUCCESS/FAILURE after its bronze append. Spark
+consumers keep ``ingestion_ledger`` over ``wh.read``.
 """
 
 from __future__ import annotations
@@ -27,8 +34,8 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from travel_data_ingestion_spark import ledger
 from travel_data_ingestion_spark.catalog import (
-    ADMIN_SCHEMAS,
     BRONZE_SCHEMAS,
     LINEAGE_FIELDS,
     Warehouse,
@@ -94,27 +101,26 @@ def ingestion_ledger(spark: SparkSession, wh: Warehouse) -> DataFrame:
     return log.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
 
 
-def _successful_files(
-    spark: SparkSession, wh: Warehouse, target_table: str | None = None
-) -> set[str]:
+def _successful_files(wh: Warehouse, target_table: str | None = None) -> set[str]:
     """SUCCESS file names, scoped to one target table: exactly-once is
     per (file, dataset) — two datasets with overlapping glob patterns
     each ingest the file into their own bronze table (the ledger's
-    target_table column exists precisely for this)."""
-    ledger = ingestion_ledger(spark, wh).filter(F.col("status") == "SUCCESS")
-    if target_table is not None:
-        ledger = ledger.filter(F.col("target_table") == target_table)
-    rows = ledger.select("file_name").collect()
-    return {r.file_name for r in rows}
-
-
-def _next_load_id(spark: SparkSession, wh: Warehouse) -> int:
-    row = wh.read(spark, "admin", "ingestion_logs").agg(F.max("load_id")).first()
-    return int(row[0] or 0) + 1
+    target_table column exists precisely for this). Latest row per
+    load_id wins, as in ``ingestion_ledger``."""
+    latest: dict[int, dict] = {}
+    for r in ledger.rows(wh, "ingestion_logs"):
+        cur = latest.get(r["load_id"])
+        if cur is None or r["event_time"] > cur["event_time"]:
+            latest[r["load_id"]] = r
+    return {
+        r["file_name"]
+        for r in latest.values()
+        if r["status"] == "SUCCESS"
+        and (target_table is None or r["target_table"] == target_table)
+    }
 
 
 def _log(
-    spark: SparkSession,
     wh: Warehouse,
     load_id: int,
     file_id: int,
@@ -124,22 +130,22 @@ def _log(
     rows_loaded: int | None = None,
     error: str | None = None,
 ) -> None:
-    df = spark.createDataFrame(
+    ledger.append(
+        wh,
+        "ingestion_logs",
         [
-            (
-                load_id,
-                file_id,
-                file_name,
-                target_table,
-                status,
-                rows_loaded,
-                error,
-                datetime.now(timezone.utc),
-            )
+            {
+                "load_id": load_id,
+                "file_id": file_id,
+                "file_name": file_name,
+                "target_table": target_table,
+                "status": status,
+                "rows_loaded": rows_loaded,
+                "error_message": error,
+                "event_time": datetime.now(timezone.utc),
+            }
         ],
-        ADMIN_SCHEMAS["ingestion_logs"],
     )
-    wh.append(spark, df, "admin", "ingestion_logs")
 
 
 def read_landing_file(spark: SparkSession, path: str, file_format: str) -> DataFrame:
@@ -229,24 +235,24 @@ def ingest_dataset(spark: SparkSession, wh: Warehouse, detail: FileDetail) -> li
     (ON_ERROR='SKIP_FILE', ingestion_logic.py:157-182); already-SUCCESS
     filenames are skipped (A-07 exactly-once ledger).
     """
-    done = _successful_files(spark, wh, detail.target_table)
+    done = _successful_files(wh, detail.target_table)
     load_ids: list[int] = []
     for path in list_stage_files(detail.source_path, detail.file_pattern):
         fname = os.path.basename(path)
         if fname in done:
             continue
-        load_id = _next_load_id(spark, wh)
-        _log(spark, wh, load_id, detail.file_id, fname, detail.target_table, "RUNNING")
+        load_id = ledger.next_id(wh, "ingestion_logs", "load_id")
+        _log(wh, load_id, detail.file_id, fname, detail.target_table, "RUNNING")
         try:
             rows = ingest_file(spark, wh, detail, path, load_id)
             _log(
-                spark, wh, load_id, detail.file_id, fname, detail.target_table,
+                wh, load_id, detail.file_id, fname, detail.target_table,
                 "SUCCESS", rows_loaded=rows,
             )
             load_ids.append(load_id)
         except Exception as exc:  # noqa: BLE001 - per-file isolation
             _log(
-                spark, wh, load_id, detail.file_id, fname, detail.target_table,
+                wh, load_id, detail.file_id, fname, detail.target_table,
                 "FAILURE", error=str(exc)[:2000],
             )
     return load_ids

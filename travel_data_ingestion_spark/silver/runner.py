@@ -1,17 +1,28 @@
 """Incremental silver runner: ledger-driven batch selection + idempotent
 writes + transformation logging (reference transformation_logic.py:12-56
 and the per-dataset boilerplate in scripts/transformations/*.py).
+
+Batch selection and logging run on the driver, with no Spark job: bronze
+load ids come from the ``load_id=N`` partition directories, the done set
+and the id allocation (MAX(transformation_id)+1, single driver) from the
+``ledger`` module. Write-ahead order: a RUNNING row is committed before
+the transform runs; after the silver writes, all of the dataset's SUCCESS
+rows (one per load id) land in ONE ledger append, or one FAILURE row on
+error. Each append is a temp file + atomic rename, so a crash leaves
+either the whole append or nothing.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from travel_data_ingestion_spark.catalog import ADMIN_SCHEMAS, Warehouse
+from travel_data_ingestion_spark import ledger
+from travel_data_ingestion_spark.catalog import Warehouse
 from travel_data_ingestion_spark.silver import transforms
 
 # dataset name -> (bronze table, transform fn)
@@ -26,46 +37,63 @@ SILVER_TRANSFORMS: dict[str, tuple[str, Callable[[DataFrame], dict[str, DataFram
 }
 
 
-def _next_transformation_id(spark: SparkSession, wh: Warehouse) -> int:
-    row = (
-        wh.read(spark, "admin", "transformation_logs")
-        .agg(F.max("transformation_id"))
-        .first()
-    )
-    return int(row[0] or 0) + 1
-
-
-def _log(
-    spark: SparkSession,
+def _log_rows(
     wh: Warehouse,
     trans_id: int,
     name: str,
-    load_id: int | None,
+    load_ids: list[int],
     status: str,
     rows: int | None = None,
     error: str | None = None,
 ) -> None:
-    df = spark.createDataFrame(
-        [(trans_id, name, load_id, status, rows, error, datetime.now(timezone.utc))],
-        ADMIN_SCHEMAS["transformation_logs"],
+    """One ledger append holding a row per load id."""
+    now = datetime.now(timezone.utc)
+    ledger.append(
+        wh,
+        "transformation_logs",
+        [
+            {
+                "transformation_id": trans_id,
+                "transformation_name": name,
+                "load_id": i,
+                "status": status,
+                "rows_written": rows,
+                "error_message": error,
+                "event_time": now,
+            }
+            for i in load_ids
+        ],
     )
-    wh.append(spark, df, "admin", "transformation_logs")
+
+
+def bronze_load_ids(wh: Warehouse, bronze_table: str) -> list[int]:
+    """Bronze load ids from the ``load_id=N`` partition directories
+    (bronze is always written partitioned by load_id). A directory
+    counts only if it holds a visible data file — the same rule as
+    Spark's partition discovery."""
+    path = wh.path("bronze", bronze_table)
+    if not os.path.isdir(path):
+        return []
+    ids = []
+    for entry in os.scandir(path):
+        if entry.is_dir() and entry.name.startswith("load_id="):
+            if any(not f.startswith((".", "_")) for f in os.listdir(entry.path)):
+                ids.append(int(entry.name.split("=", 1)[1]))
+    return sorted(ids)
 
 
 def pending_load_ids(
     spark: SparkSession, wh: Warehouse, dataset: str, bronze_table: str
 ) -> list[int]:
-    """New-work detection: bronze DISTINCT load_id anti-joined against
-    SUCCESS ledger rows (reference transactions.py:14-23, C-05)."""
-    bronze_ids = wh.read(spark, "bronze", bronze_table).select("load_id").distinct()
-    done = (
-        wh.read(spark, "admin", "transformation_logs")
-        .filter((F.col("transformation_name") == dataset) & (F.col("status") == "SUCCESS"))
-        .select("load_id")
-        .distinct()
-    )
-    rows = bronze_ids.join(done, "load_id", "left_anti").collect()
-    return sorted(int(r.load_id) for r in rows)
+    """New-work detection: bronze load ids minus the SUCCESS ledger
+    rows' load ids (reference transactions.py:14-23, C-05). Runs on the
+    driver; ``spark`` is unused and kept for the stable signature."""
+    done = {
+        r["load_id"]
+        for r in ledger.rows(wh, "transformation_logs")
+        if r["transformation_name"] == dataset and r["status"] == "SUCCESS"
+    }
+    return [i for i in bronze_load_ids(wh, bronze_table) if i not in done]
 
 
 def run_silver(
@@ -90,20 +118,14 @@ def run_silver(
         if load_id is not None:
             ids = [load_id]
         elif reprocess:
-            ids = [
-                int(r.load_id)
-                for r in wh.read(spark, "bronze", bronze_table)
-                .select("load_id")
-                .distinct()
-                .collect()
-            ]
+            ids = bronze_load_ids(wh, bronze_table)
         else:
             ids = pending_load_ids(spark, wh, name, bronze_table)
         if not ids:
             continue
         batch = wh.read(spark, "bronze", bronze_table).filter(F.col("load_id").isin(ids))
-        trans_id = _next_transformation_id(spark, wh)
-        _log(spark, wh, trans_id, name, max(ids), "RUNNING")
+        trans_id = ledger.next_id(wh, "transformation_logs", "transformation_id")
+        _log_rows(wh, trans_id, name, [max(ids)], "RUNNING")
         try:
             outputs = fn(batch)
             total = 0
@@ -112,13 +134,13 @@ def run_silver(
                 total += spark.read.parquet(wh.path("silver", table)).filter(
                     F.col("load_id").isin(ids)
                 ).count()
-            # one SUCCESS row per processed batch: the ledger is the
-            # exactly-once contract consumed by pending_load_ids
-            for i in ids:
-                _log(spark, wh, trans_id, name, i, "SUCCESS", rows=total)
+            # one SUCCESS row per processed batch, all in one append: the
+            # ledger is the exactly-once contract consumed by
+            # pending_load_ids
+            _log_rows(wh, trans_id, name, ids, "SUCCESS", rows=total)
             results[name] = total
         except Exception as exc:  # noqa: BLE001 - per-dataset isolation
-            _log(spark, wh, trans_id, name, max(ids), "FAILURE", error=str(exc)[:2000])
+            _log_rows(wh, trans_id, name, [max(ids)], "FAILURE", error=str(exc)[:2000])
             failures[name] = str(exc)[:500]
     if failures:
         # true per-dataset isolation (each reference transform is its own

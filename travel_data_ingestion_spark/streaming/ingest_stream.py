@@ -40,18 +40,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from travel_data_ingestion_spark import ledger
 from travel_data_ingestion_spark.catalog import (
-    ADMIN_SCHEMAS,
     BRONZE_SCHEMAS,
     LINEAGE_FIELDS,
     Warehouse,
 )
 from travel_data_ingestion_spark.io import CSV_OPTIONS
-from travel_data_ingestion_spark.ingest import (
-    _csv_null_tokens,
-    _next_load_id,
-    lineage_row_id,
-)
+from travel_data_ingestion_spark.ingest import _csv_null_tokens, lineage_row_id
 
 _LINEAGE_COLS = [f.name for f in LINEAGE_FIELDS]
 
@@ -94,6 +90,24 @@ def _write_int_marker(jvm, fs, marker, value: int) -> None:
             f"rename {tmp} -> {marker} failed (concurrent writer, or the "
             "store lacks atomic rename); marker not persisted"
         )
+
+
+def _log_stream(wh: Warehouse, load_id: int, target_table: str, status: str) -> None:
+    """Stream ledger row; file_id is NULL because streams have no
+    config row."""
+    ledger.append(
+        wh,
+        "ingestion_logs",
+        [
+            {
+                "load_id": load_id,
+                "file_name": f"stream:{target_table}",
+                "target_table": target_table,
+                "status": status,
+                "event_time": datetime.now(timezone.utc),
+            }
+        ],
+    )
 
 
 def _epoch_load_id(
@@ -160,37 +174,18 @@ def _epoch_load_id(
                 v = _read_int_marker(jvm, fs, st.getPath())
                 if v is not None:
                     claimed.add(v)
-        committed = candidate not in claimed and (
-            wh.read(spark, "admin", "ingestion_logs")
-            .filter(
-                (F.col("load_id") == candidate)
-                & (F.col("file_name") == f"stream:{target_table}")
-            )
-            .limit(1)
-            .count()
+        committed = candidate not in claimed and any(
+            r["load_id"] == candidate and r["file_name"] == f"stream:{target_table}"
+            for r in ledger.rows(wh, "ingestion_logs")
         )
         if committed:
             _write_int_marker(jvm, fs, marker, candidate)
             return candidate
-    lid = _next_load_id(spark, wh)
+    lid = ledger.next_id(wh, "ingestion_logs", "load_id")
     if floor is not None:
         lid = max(lid, int(floor))
-    log = spark.createDataFrame(
-        [
-            (
-                lid,
-                None,
-                f"stream:{target_table}",
-                target_table,
-                "RUNNING",  # reservation; collapsed by the SUCCESS row's recency
-                None,
-                None,
-                datetime.now(timezone.utc),
-            )
-        ],
-        ADMIN_SCHEMAS["ingestion_logs"],
-    )
-    wh.append(spark, log, "admin", "ingestion_logs")
+    # reservation; collapsed by the SUCCESS row's recency
+    _log_stream(wh, lid, target_table, "RUNNING")
     _write_int_marker(jvm, fs, marker, lid)
     return lid
 
@@ -244,22 +239,7 @@ def stream_ingest_csv(
         # ledger row so the batch path's MAX(load_id)+1 sees this load;
         # a replayed epoch appends a duplicate row, which the append+
         # latest-wins ledger semantics absorb (same load_id, same file)
-        log = s.createDataFrame(
-            [
-                (
-                    eid,
-                    None,  # file_id: streams have no config row
-                    f"stream:{target_table}",
-                    target_table,
-                    "SUCCESS",
-                    None,
-                    None,
-                    datetime.now(timezone.utc),
-                )
-            ],
-            ADMIN_SCHEMAS["ingestion_logs"],
-        )
-        wh.append(s, log, "admin", "ingestion_logs")
+        _log_stream(wh, eid, target_table, "SUCCESS")
 
     q = (
         stream.writeStream.foreachBatch(write_batch)
